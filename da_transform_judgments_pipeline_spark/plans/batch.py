@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 from ..operators.validation import STATUS_OK
 from ..session import local_df
 from ..sources.archive import untar
-from ..sources.catalog import read_file_catalog
+from ..sources.catalog import key_by_root, read_keyed_catalog
 from ..sources.manifest import manifest_from_lines
 from .events import latest_uuid, validate_event
 from .stages import (
@@ -318,42 +318,45 @@ def validate_bagit_files_batch(
         raise ValueError("one batch = one store root")
     store = plans[0]["store"]
 
-    # 1+2) ONE binaryFile scan over every archive, ONE untar fan-out.
-    # binaryFile paths come back with a file: scheme prefix — normalize
-    # when mapping archive → consignment.
-    archives = read_file_catalog(spark, [p["archive_path"] for p in plans])
-    # report-mode untar: a corrupt delivery yields one error row instead
+    # 1+2) ONE binaryFile scan over every archive, keyed by its archive
+    # path, then ONE untar fan-out whose ``archive`` column is that key.
+    # Report-mode untar: a corrupt delivery yields one error row instead
     # of failing the whole batch job — that consignment routes to its own
     # error event below, everyone else proceeds
-    members = untar(archives, on_error="report")
-    plan_rows = [
-        (p["archive_path"], p["unpacked_root"], p["out_prefix"])
-        for p in plans
-    ]
-    plan_df = local_df(spark, 
-        plan_rows, "archive_path string, unpacked_root string, out_prefix string"
+    archives = read_keyed_catalog(
+        spark, [(p["archive_path"], p["archive_path"]) for p in plans]
     )
-    # persisted ONCE: three downstream actions (member write, validation
-    # report, manifest-list collect) all derive from the untarred member
-    # set — without the persist each action would re-scan and re-untar
-    # EVERY archive (MEMORY_AND_DISK: the member set is the same bytes a
-    # task already held during untar, spilled if the batch is large)
-    keyed = members.withColumn(
-        "archive_nofs", F.regexp_replace("archive", "^file:", "")
-    ).join(
-        F.broadcast(plan_df),
-        F.col("archive_nofs") == F.col("archive_path"),
-        "left",
-    ).persist()
+    members = untar(archives, path_col="key", on_error="report")
+    plan_df = local_df(
+        spark,
+        [
+            (p["archive_path"], p["unpacked_root"], p["out_prefix"])
+            for p in plans
+        ],
+        "archive string, unpacked_root string, out_prefix string",
+    )
+    # persisted ONCE: four downstream actions (counts, member write,
+    # validation report, manifest-list collect) all derive from the
+    # untarred member set — without the persist each action would re-scan
+    # and re-untar EVERY archive (MEMORY_AND_DISK: the member set is the
+    # same bytes a task already held during untar, spilled if large)
+    keyed = members.join(F.broadcast(plan_df), "archive").persist()
     _cached_members = keyed  # keep the handle: `keyed` is reassigned below
     # and unpersist() on a derived frame would silently leak the cache
 
-    unpack_errors = {
-        r["unpacked_root"]: r["error"]
-        for r in keyed.filter(F.col("error").isNotNull())
-        .select("unpacked_root", "error")
-        .collect()
-    }
+    # Per-consignment unpack error + extracted count in ONE aggregation.
+    # The count covers EVERY member the archive produced, including a
+    # malformed tar's stray siblings outside the unpacked root — the
+    # sequential stage's extracted_total sees those too, and the count
+    # checks below must agree with it.
+    unpack_errors: dict[str, str] = {}
+    n_all_by_root: dict[str, int] = {}
+    for r in keyed.groupBy("unpacked_root").agg(
+        F.count("name").alias("n"), F.max("error").alias("error")
+    ).collect():
+        n_all_by_root[r["unpacked_root"]] = r["n"]
+        if r["error"] is not None:
+            unpack_errors[r["unpacked_root"]] = r["error"]
     keyed = keyed.filter(F.col("error").isNull())
     live_roots = [
         p["unpacked_root"]
@@ -372,19 +375,7 @@ def validate_bagit_files_batch(
         .alias("name"),
         "content",
     )
-    extracted_names = _write_members(to_write, store)
-    # Per-consignment extracted counts keyed by the (uuid-unique)
-    # out_prefix: counts EVERY member the archive produced, including a
-    # malformed tar's stray siblings outside the unpacked root — the
-    # sequential stage's extracted_total sees those too, and the count
-    # checks below must agree with it.
-    n_all_by_prefix: dict[str, int] = {p["out_prefix"]: 0 for p in plans}
-    prefixes_desc = sorted(n_all_by_prefix, key=len, reverse=True)
-    for name in extracted_names:
-        for pref in prefixes_desc:
-            if pref == "" or name.startswith(pref + "/"):
-                n_all_by_prefix[pref] += 1
-                break
+    _write_members(to_write, store)
 
     # 4+5+6) manifests + checksums + counts: one relational report over
     # member rows STILL IN FLIGHT (never re-read from the store). Members
@@ -415,36 +406,16 @@ def validate_bagit_files_batch(
 
     # 7) store re-listing audit, ONE scan: the sequential stage's third
     # count check (extracted vs what the store now actually holds)
-    listing = (
-        read_file_catalog(
-            spark, [f"{store}/{r}" for r in live_roots],
-            with_content=False,
-        )
-        if live_roots
-        else None
-    )
     listing_counts: dict[str, int] = {}
-    if listing is not None:
-        listing = listing.select(
-            F.regexp_replace("path", "^file:" + _re(store) + "/", "").alias(
-                "relpath"
-            )
-        )
-        root_expr = F.coalesce(
-            *[
-                F.when(
-                    F.col("relpath").startswith(r + "/"),
-                    F.lit(r),
-                )
-                for r in live_roots
-            ]
-        )
+    if live_roots:
         listing_counts = {
-            r["root"]: r["n"]
-            for r in listing.select(root_expr.alias("root"))
-            .filter(F.col("root").isNotNull())
-            .groupBy("root")
-            .agg(F.count("*").alias("n"))
+            r["key"]: r["count"]
+            for r in read_keyed_catalog(
+                spark, [(r, f"{store}/{r}") for r in live_roots],
+                with_content=False,
+            )
+            .groupBy("key")
+            .count()
             .collect()
         }
     _cached_members.unpersist()
@@ -472,7 +443,7 @@ def validate_bagit_files_batch(
             # with ITS operands: totals include stray members outside the
             # unpacked root (n_all), which the root-relative report can't
             # see — driver-side arithmetic on already-collected counts
-            n_all = n_all_by_prefix.get(p["out_prefix"], 0)
+            n_all = n_all_by_root.get(root, 0)
             manifests_total = 1 + rep["n_root_listed"] + rep["n_data_listed"]
             n_listed = listing_counts.get(root, 0)
             if n_all != manifests_total:
@@ -541,6 +512,8 @@ def validate_bagit_batch(
        never materializes as a Spark row. The running digest IS the
        stored bytes' digest, so no second read pass hashes the archive.
     2. ONE scan over the (tiny) stored sidecars parsing every manifest,
+       each row keyed by its consignment prefix with one broadcast join
+       (:func:`..sources.catalog.read_keyed_catalog`),
     3. ONE joined report applying the stage's checks per consignment, in
        its order and with its error strings: exactly-one sidecar row →
        basename parity → archive checksum. A failed copy (unreadable
@@ -597,32 +570,23 @@ def validate_bagit_batch(
 
     # 2) one scan over the stored sidecars only (KBs each) → keyed
     # manifest rows; archives are NOT re-read
-    sidecar_paths = [
-        f"{ctx.store_root}/{p['prefix']}/{p['sha_name']}"
+    sidecars = [
+        (p["prefix"], f"{ctx.store_root}/{p['prefix']}/{p['sha_name']}")
         for p in plans
-        if copy_results.get(
-            f"{ctx.store_root}/{p['prefix']}/{p['sha_name']}", {"ok": False}
-        )["ok"]
     ]
-    prefix_expr = None
-    for p in plans:
-        cond = F.col("path").contains(f"/{p['prefix']}/")
-        prefix_expr = (
-            F.when(cond, F.lit(p["prefix"]))
-            if prefix_expr is None
-            else prefix_expr.when(cond, F.lit(p["prefix"]))
-        )
+    sidecars = [
+        (key, path) for key, path in sidecars
+        if copy_results.get(path, {"ok": False})["ok"]
+    ]
     m_agg_rows = {}
-    if sidecar_paths:
+    if sidecars:
         manifests = manifest_from_lines(
-            read_file_catalog(spark, sidecar_paths).select(
-                prefix_expr.alias("prefix"), "content"
-            ),
+            read_keyed_catalog(spark, sidecars).select("key", "content"),
             "content",
         )
         m_agg_rows = {
-            r["prefix"]: r
-            for r in manifests.groupBy("prefix")
+            r["key"]: r
+            for r in manifests.groupBy("key")
             .agg(
                 F.count("*").cast("long").alias("n_rows"),
                 F.min(F.struct("checksum", "file", "basename")).alias(
@@ -708,12 +672,15 @@ def bagit_to_dri_sip_batch(
     ALL consignments' SIPs built in one set of Spark jobs:
 
     1. ONE scan collects every bag-info.txt (N×a-dozen kv rows —
-       config-plane); per-consignment :func:`..operators.dri_sip.
-       dri_config` naming is driver arithmetic. Config failures (missing
-       keys, malformed reference) route that consignment to the error
-       event and drop it from the batch, like the sequential try/except.
-    2. ONE keyed manifest scan + ONE keyed file-metadata.csv scan (all
-       files in one spark.read.csv — the batch therefore assumes a
+       config-plane), keyed by consignment root with one broadcast join
+       (:func:`..sources.catalog.read_keyed_catalog`); per-consignment
+       :func:`..operators.dri_sip.dri_config` naming is driver
+       arithmetic. Config failures (missing keys, malformed reference)
+       route that consignment to the error event and drop it from the
+       batch, like the sequential try/except.
+    2. ONE manifest scan + ONE file-metadata.csv scan, each keyed by the
+       same broadcast join (all files in one spark.read.csv, keyed by
+       :func:`..sources.catalog.key_by_root` — the batch therefore assumes a
        uniform TDR header vocabulary across its consignments; mix v1.1
        and v1.2 batches by grouping on vocabulary first). The read sets
        ``enforceSchema=false`` so EVERY file's header row is validated
@@ -728,10 +695,12 @@ def bagit_to_dri_sip_batch(
     4. ONE distributed write lands CSVs, .sha256 sidecars (sha2 over the
        in-flight CSV text — the same bytes the file holds), and schema
        files under each ``{root}/sip/``.
-    5. ONE tar_gz_pack call packs every SIP (applyInPandas groups by
+    5. ONE keyed scan of every ``data/`` and ``sip/`` tree, then ONE
+       tar_gz_pack call packs every SIP (applyInPandas groups by
        archive — one task per consignment's tar.gz, the same per-archive
-       memory model as the sequential stage), then one distributed write
-       lands each archive + its sidecar under ``ctx.out_root``.
+       memory model as the sequential stage; member names drop the keyed
+       root's URI), then one distributed write lands each archive + its
+       sidecar under ``ctx.out_root``.
 
     Note on error isolation: after config build, the remaining work is
     one fused job set — an engine-side strict-enum error (dri_sip P1
@@ -769,24 +738,20 @@ def bagit_to_dri_sip_batch(
         raise ValueError("one batch = one store root")
     store = plans[0]["store"]
 
+    def under_roots(ps, name):
+        return [(p["root"], f"{store}/{p['root']}/{name}") for p in ps]
+
     # 1) config: one scan over every bag-info.txt, parsed driver-side
     # with the reference's left-most-colon split (object_lib.py:211-228)
-    info_rows = read_file_catalog(
-        spark, [f"{store}/{p['root']}/bag-info.txt" for p in plans]
-    ).select("path", "content").collect()
     info_by_root: dict[str, dict] = {}
-    for r in info_rows:
-        for p in plans:
-            if r["path"].endswith(f"/{p['root']}/bag-info.txt") or r[
-                "path"
-            ].endswith(f":{store}/{p['root']}/bag-info.txt"):
-                kv = {}
-                for line in bytes(r["content"]).decode().splitlines():
-                    if line.strip():
-                        k, _, v = line.partition(":")
-                        kv[k.strip()] = v.strip()
-                info_by_root[p["root"]] = kv
-                break
+    for r in read_keyed_catalog(
+        spark, under_roots(plans, "bag-info.txt")
+    ).select("key", "content").collect():
+        kv = info_by_root[r["key"]] = {}
+        for line in bytes(r["content"]).decode().splitlines():
+            if line.strip():
+                k, _, v = line.partition(":")
+                kv[k.strip()] = v.strip()
 
     out_events: dict[int, dict] = {}
     live: list[dict] = []
@@ -812,34 +777,26 @@ def bagit_to_dri_sip_batch(
     if not live:
         return [out_events[i] for i in range(len(plans))]
 
-    root_expr_cases = None
-    for p in live:
-        cond = F.col("path").contains(f"/{p['root']}/")
-        root_expr_cases = (
-            F.when(cond, F.lit(p["root"]))
-            if root_expr_cases is None
-            else root_expr_cases.when(cond, F.lit(p["root"]))
-        )
-
     # 2) keyed manifest + file-metadata scans (one job each)
     manifest = manifest_from_lines(
-        read_file_catalog(
-            spark, [f"{store}/{p['root']}/manifest-sha256.txt" for p in live]
-        )
-        .select(root_expr_cases.alias("consignment"), "content"),
+        read_keyed_catalog(
+            spark, under_roots(live, "manifest-sha256.txt")
+        ).select(F.col("key").alias("consignment"), "content"),
         "content",
     )
+    fm_roots = under_roots(live, "file-metadata.csv")
     fm = (
-        spark.read.option("enforceSchema", False)
-        .csv(
-            [f"{store}/{p['root']}/file-metadata.csv" for p in live],
-            header=True,
-            inferSchema=False,
-            escape='"',
+        key_by_root(
+            spark.read.option("enforceSchema", False).csv(
+                [path for _, path in fm_roots],
+                header=True,
+                inferSchema=False,
+                escape='"',
+            ),
+            fm_roots,
         )
-        .withColumn("path", F.input_file_name())
-        .withColumn("consignment", root_expr_cases)
-        .drop("path")
+        .withColumnRenamed("key", "consignment")
+        .drop("uri")
         .na.fill("")
         .withColumn("_row_order", F.monotonically_increasing_id())
     )
@@ -943,47 +900,30 @@ def bagit_to_dri_sip_batch(
         ],
         "consignment string, zip_name string, internal_prefix string",
     )
-    data_members = read_file_catalog(
-        spark, [f"{store}/{p['root']}/data" for p in live]
-    ).withColumn("consignment", root_expr_cases).join(
-        F.broadcast(pack_dim), "consignment"
-    ).select(
-        "consignment",
-        F.col("zip_name").alias("archive"),
-        F.col("path").alias("name"),
-        "content",
-        F.unix_timestamp("modificationTime").alias("mtime"),
-        F.concat(
-            F.lit(f"file:{store}/"), F.col("consignment"), F.lit("/data/")
-        ).alias("rm"),
-        F.col("internal_prefix").alias("add"),
-    )
-    meta_members = read_file_catalog(
-        spark, [f"{store}/{p['root']}/sip" for p in live]
-    ).withColumn("consignment", root_expr_cases).join(
-        F.broadcast(pack_dim), "consignment"
-    ).filter(
-        F.col("path").startswith(
-            F.concat(
-                F.lit(f"file:{store}/"),
-                F.col("consignment"),
-                F.lit("/sip/"),
-                F.col("internal_prefix"),
+
+    def pack_members(subdir, rm):
+        # rm: the path prefix each tar member name drops, built from the
+        # keyed root's URI (data/ loses "{uri}/", sip/ the internal prefix)
+        return (
+            read_keyed_catalog(spark, under_roots(live, subdir))
+            .withColumnRenamed("key", "consignment")
+            .join(F.broadcast(pack_dim), "consignment")
+            .withColumn("rm", rm)
+            .filter(F.col("path").startswith(F.col("rm")))
+            .select(
+                "consignment",
+                F.col("zip_name").alias("archive"),
+                F.col("path").alias("name"),
+                "content",
+                F.unix_timestamp("modificationTime").alias("mtime"),
+                "rm",
+                F.col("internal_prefix").alias("add"),
             )
         )
-    ).select(
-        "consignment",
-        F.col("zip_name").alias("archive"),
-        F.col("path").alias("name"),
-        "content",
-        F.unix_timestamp("modificationTime").alias("mtime"),
-        F.concat(
-            F.lit(f"file:{store}/"),
-            F.col("consignment"),
-            F.lit("/sip/"),
-            F.col("internal_prefix"),
-        ).alias("rm"),
-        F.col("internal_prefix").alias("add"),
+
+    data_members = pack_members("data", F.concat(F.col("uri"), F.lit("/")))
+    meta_members = pack_members(
+        "sip", F.concat(F.col("uri"), F.lit("/"), F.col("internal_prefix"))
     )
     packed = tar_gz_pack(
         data_members.unionByName(meta_members),
@@ -1128,9 +1068,3 @@ def orchestrated_batch_stage(
         )
 
     return stage
-
-
-def _re(s: str) -> str:
-    import re
-
-    return re.escape(s)

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import importlib.resources
 import os
+import re
 import shutil
 
 from pyspark.sql import SparkSession
@@ -204,7 +205,7 @@ def validate_bagit_files(
                 read_file_catalog(spark, root_dir)
                 .select(
                     F.regexp_replace(
-                        F.col("path"), f"^file:{_re(store)}/{_re(unpacked_root)}/", ""
+                        F.col("path"), f"^file:{re.escape(store)}/{re.escape(unpacked_root)}/", ""
                     ).alias("file"),
                     "content",
                 )
@@ -389,9 +390,3 @@ def _write_members(members, dest_root: str) -> list[str]:
         return [r["name"] for r in members.select("name").collect()]
     finally:
         members.unpersist()
-
-
-def _re(s: str) -> str:
-    import re
-
-    return re.escape(s)

@@ -19,7 +19,8 @@ prove a point already made at smaller N) and records the batch side's
 job count, per-consignment wall-clock, and peak driver/JVM-heap memory.
 
 Usage: python scripts/batch_vs_sequential.py [--sip] [--batch-only] [N ...]
-(default 6 24)
+(default 6 24). The session is session.get_spark's: local[SPARK_GRAFT_CPUS]
+(default: every core), one shuffle partition per core.
 """
 
 from __future__ import annotations
@@ -91,8 +92,6 @@ def build_bagit(ref: str) -> bytes:
 def main() -> None:
     ns = [int(a) for a in sys.argv[1:] if not a.startswith("-")] or [6, 24]
 
-    from pyspark.sql import SparkSession
-
     from da_transform_judgments_pipeline_spark.plans.batch import (
         validate_consignments_batch,
     )
@@ -105,14 +104,9 @@ def main() -> None:
         validate_bagit,
         validate_bagit_files,
     )
+    from da_transform_judgments_pipeline_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("batch-vs-sequential")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="batch-vs-sequential")
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
     tracker = sc.statusTracker()
@@ -235,8 +229,8 @@ def main() -> None:
         if header_needed:
             f.write(
                 "# Batched vs sequential intake chain (round 8)\n\n"
-                "Measured on local[32]; valid consignments, 4 data files "
-                "each; independent\nstores, event-name equivalence checked "
+                f"Measured on {sc.master}; valid consignments, 4 data "
+                "files each; independent\nstores, event-name equivalence checked "
                 "per run. The batch twin's job count\nis O(1) in N while "
                 "the sequential loop's grows linearly. Soak rows\n"
                 "(--batch-only) record per-consignment wall-clock and peak "

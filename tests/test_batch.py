@@ -554,19 +554,32 @@ def test_bagit_to_dri_sip_batch_routes_config_errors(spark, tmp_path):
 def test_full_chain_to_sip(spark, tmp_path):
     """Three job sets end-to-end: bagit-available deliveries → validated
     → SIP, with a stage-B failure short-circuiting before the SIP
-    stage."""
+    stage. References that are string prefixes of each other (A1 / A10)
+    stay apart; terminal events and SIP member bytes match the
+    sequential chain run over the same deliveries."""
     from da_transform_judgments_pipeline_spark.plans.batch import (
         validate_consignments_batch,
+    )
+    from da_transform_judgments_pipeline_spark.plans.stages import (
+        bagit_to_dri_sip,
     )
 
     delivery = tmp_path / "fdelivery"
     delivery.mkdir()
-    ctx = StageContext(
-        store_root=str(tmp_path / "fstore"),
-        out_root=str(tmp_path / "fout"),
+    ctx, ctx_seq = (
+        StageContext(
+            store_root=str(tmp_path / f"fstore{tag}"),
+            out_root=str(tmp_path / f"fout{tag}"),
+        )
+        for tag in ("", "-seq")
     )
     events = []
-    for ref, good in (("TDR-2026-FAA", True), ("TDR-2026-FBB", False)):
+    for ref, good in (
+        ("TDR-2026-FAA", True),
+        ("TDR-2026-FBB", False),
+        ("TDR-2026-A1", True),
+        ("TDR-2026-A10", True),
+    ):
         entries = members_for_sip(ref)
         if not good:  # corrupt a data file AFTER manifests were built
             entries["data/content/file-1.txt"] = b"tampered"
@@ -585,16 +598,44 @@ def test_full_chain_to_sip(spark, tmp_path):
         events.append(_available_event(delivery, ref))
 
     out = validate_consignments_batch(spark, events, ctx, to_sip=True)
+    sip_ok = "dri-preingest-sip-available"
     assert [e["producer"]["event-name"] for e in out] == [
-        "dri-preingest-sip-available",
+        sip_ok,
         EVENT_BAGIT_ERROR,
+        sip_ok,
+        sip_ok,
     ]
-    url = out[0]["parameters"]["dri-preingest-sip-available"]["s3-folder-url"]
+    url = out[0]["parameters"][sip_ok]["s3-folder-url"]
     names = set(_read_sip_tar(url))
     assert any(n.endswith("metadata.csv") for n in names)
     assert any(n.endswith("file-1.txt") for n in names)
     errs = out[1]["parameters"]["bagit-validation-error"]["errors"]
     assert "does not match expected checksum" in errs[0]
+
+    sequential = []
+    for e in events:
+        e = validate_bagit(spark, e, ctx_seq)
+        if e["producer"]["event-name"] == "bagit-received":
+            e = validate_bagit_files(spark, e, ctx_seq)
+        if e["producer"]["event-name"] == EVENT_BAGIT_VALIDATED:
+            e = bagit_to_dri_sip(spark, e, ctx_seq)
+        sequential.append(e)
+
+    def norm_out(event, c):
+        n, ref, params = _norm(event)
+        return n, ref, {
+            k: v.replace(c.out_root, "<out>") if isinstance(v, str) else v
+            for k, v in params.items()
+        }
+
+    assert [norm_out(e, ctx) for e in out] == [
+        norm_out(e, ctx_seq) for e in sequential
+    ]
+    for e_bat, e_seq in zip(out, sequential):
+        if e_bat["producer"]["event-name"] == sip_ok:
+            tar_bat = _read_sip_tar(e_bat["parameters"][sip_ok]["s3-folder-url"])
+            tar_seq = _read_sip_tar(e_seq["parameters"][sip_ok]["s3-folder-url"])
+            assert tar_bat == tar_seq
 
 
 def test_orchestrated_batch_stage_via_pipeline(spark, tmp_path):
